@@ -62,27 +62,6 @@ object Explain {
               f"${ms / 1000.0}%.3f s  ${si.name.take(70)}")
           }
         })
-    // SPARK_GRAFT_SCANTEST: A/B a bare noop save of the LSH index
-    // catalog table vs the same files as a raw parquet read
-    if (sys.env.get("SPARK_GRAFT_SCANTEST").contains("true")) {
-      val idx = ext.Similarity.bucketedEmb(spark, sfDir)
-      for (i <- 1 to 3) {
-        val t0 = System.nanoTime()
-        idx.write.format("noop").mode("overwrite").save()
-        println(f"[scantest] table scan $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      val loc = spark.sql(
-        s"DESCRIBE EXTENDED graft_index.${spark.catalog.listTables("graft_index")
-          .collect().head.name}")
-        .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
-        .collect().head.getString(1)
-      val raw = spark.read.parquet(loc)
-      for (i <- 1 to 3) {
-        val t0 = System.nanoTime()
-        raw.write.format("noop").mode("overwrite").save()
-        println(f"[scantest] raw scan $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-    }
     // SPARK_GRAFT_RUNS=<k>: per run, rebuild the frame AND save — the
     // exact thing Bench.runOnce times (iterative queries do their
     // fixpoint work during CONSTRUCTION, which a save-only loop would

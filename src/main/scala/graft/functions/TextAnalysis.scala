@@ -285,9 +285,8 @@ object TextAnalysis {
     * [[ClassifierBuckets]]) → 96.8 / 96.0 / 91.5 %. Accepted, unlike
     * the bigram family (measured-and-rejected, r14). The exact
     * collision set (hence the point estimate) is salt-specific:
-    * FeatureProbe rides this constant so probe runs measure the
-    * shipped configuration. Production swaps wider views, same
-    * two-arm dataflow.
+    * the recorded censuses measured THIS salt. Production swaps wider
+    * views, same two-arm dataflow.
     */
   private[graft] val ClassifierSalt = "#s1"
 
@@ -1622,55 +1621,17 @@ object TextAnalysis {
         concat(acc, x)).otherwise(concat(acc, lit(BpeSep), x)))
   }
 
-  /** ALL of a round's symbol-disjoint merges in ONE fold pass — the
-    * batched trainer's per-round projection. Disjointness makes the
-    * simultaneous pass equal the sequential [[bpeMergeFold]] stack
-    * (merging (a,b) can neither create, destroy, nor shadow an
-    * occurrence of (c,d) when {a,b,ab} ∩ {c,d,cd} = ∅ — pinned by the
-    * BpeLawsSpec equivalence law), while the expression stays O(batch)
-    * in size: a stack of `batch` nested `aggregate()` folds is
-    * ~4^batch after projection collapse duplicates each fold's input
-    * into the next one's references — measured pathological at
-    * batch=8 (round 3 never finishes planning/codegen; round 15).
-    * The accumulator is a (pre, last) STRUCT so the running string's
-    * last symbol is tracked instead of re-`split` per element.
-    */
-  private[graft] def bpeMergeFoldAll(
-      syms: Column, pairs: Seq[(String, String)]): Column = {
-    val a = split(syms, BpeSep)
-    aggregate(
-      slice(a, lit(2), size(a) - 1),
-      struct(lit("").as("pre"), element_at(a, lit(1)).as("last")),
-      (acc, x) => {
-        val hit = pairs.map { case (s1, s2) =>
-          acc.getField("last") === lit(s1) && x === lit(s2)
-        }.reduce(_ || _)
-        when(hit, struct(acc.getField("pre").as("pre"),
-            concat(acc.getField("last"), x).as("last")))
-          .otherwise(struct(
-            concat(acc.getField("pre"), lit(BpeSep), acc.getField("last"))
-              .as("pre"),
-            x.as("last")))
-      },
-      // pre is either empty or sep-prefixed; gluing pre⊕sep⊕last and
-      // dropping the leading separator restores the exact string
-      acc => substring(
-        concat(acc.getField("pre"), lit(BpeSep), acc.getField("last")),
-        2, Int.MaxValue))
-  }
-
   /** Max merges folded as stacked projections before the encoder
     * re-materializes the symbol table: each [[bpeMergeFold]] is one
     * nested `aggregate()` expression, so an unbounded stack blows
     * Catalyst plan size (and codegen) at tokenizer-realistic merge
     * counts. The 10-merge oracle regime stays on the identical
-    * single-chunk plan at any value ≥ 10; the >4M-word fallback's
-    * wall is SCHEDULER round-trips (r17 full-depth gate: 32k/16 =
-    * 2048 jobs × ~0.75 s ≈ 1543 s, compute a small fraction), so the
-    * chunk is sized to the largest stack that still plans/compiles
-    * cleanly — 64 cuts the job count 4× (r18, VERDICT #6; measured in
-    * scaling_r19/bpe_fallback_chunk64.json via [[graft.BpeChunkAb]],
-    * equality law in BpeLawsSpec unchanged).
+    * single-chunk plan at any value ≥ 10. The >4M-word fallback's
+    * wall is SCHEDULER round-trips (scaling_r17/bpe_full_depth_gate.json:
+    * 32k/16 = 2048 jobs × ~0.75 s ≈ 1543 s, compute a small fraction);
+    * 64 is the largest stack that still plans/compiles cleanly, and
+    * it measured level with 16 on wall (98.2 vs 97.9 s,
+    * scaling_r19/bpe_fallback_chunk64.json).
     */
   private[graft] val BpeEncodeChunk = 64
 
@@ -1679,7 +1640,7 @@ object TextAnalysis {
     * within a chunk of ≤ [[BpeEncodeChunk]], and the frame is
     * re-materialized (eager DISK_ONLY localCheckpoint, predecessor
     * blocks released) between chunks — so a 32k-merge tokenizer
-    * encodes in 32k/16 bounded-size map-only jobs instead of one
+    * encodes in 32k/64 bounded-size map-only jobs instead of one
     * unplannable expression tree. ≤ [[BpeEncodeChunk]] merges never
     * checkpoint, keeping the oracle-regime plan byte-identical to the
     * pre-chunking encoder. The last chunk's checkpoint (if any)
@@ -1687,13 +1648,9 @@ object TextAnalysis {
     * result as a train-once artifact anyway ([[bpeWordTokens]]).
     */
   private[graft] def bpeEncodeSyms(
-      vocab0: DataFrame, merges: Seq[(String, String)],
-      chunkSize: Int = BpeEncodeChunk): DataFrame = {
-    // chunkSize is an override for the committed chunk-size A/B
-    // (scaling_r19/bpe_fallback_chunk64.json); production always
-    // folds at [[BpeEncodeChunk]]
+      vocab0: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val chunks = merges.grouped(chunkSize).toSeq
+    val chunks = merges.grouped(BpeEncodeChunk).toSeq
     var state = vocab0
     var free: () => Unit = () => ()
     chunks.zipWithIndex.foreach { case (chunk, i) =>
@@ -1786,8 +1743,8 @@ object TextAnalysis {
       val wordsDf = Tables.documents(spark, sfDir)
         .select(explode(words(col("text"))).as("t"))
         .filter(length(col("t")) >= 1).distinct()
-      // the encode relation is VOCABULARY grain — the same bound the
-      // trainer's collect rides. Under it, replay the frozen list in
+      // the encode relation is VOCABULARY grain — under
+      // [[BpeDriverLoopMaxWords]] words, replay the frozen list in
       // memory ([[bpeDriverEncodeSyms]]): the r17 full-depth gate
       // measured the chunked path's 32k/16 = 2048 scheduler
       // round-trips at 1543 s for a 50k-word table the replay loop
@@ -1907,6 +1864,14 @@ object TextAnalysis {
   private def bpeVocabBuild(spark: SparkSession, sfDir: String): DataFrame =
     bpeVocabFromWf(spark, wordFreq(Tables.documents(spark, sfDir)))
 
+  /** Vocabulary rows per shuffle partition for the trainer's cloned
+    * iteration session — rows are short symbol strings that explode
+    * into ~|word| pair structs, so 64k rows keeps a round partition
+    * well inside executor memory while collapsing the tiny-vocab case
+    * to single-task rounds.
+    */
+  private val VocabRowsPerPartition = 1L << 16
+
   /** The training loop over ANY (t, n_w) word-frequency relation —
     * exposed so the streaming-maintained table
     * ([[graft.streaming.VocabRefresh]]) trains through the exact
@@ -1920,14 +1885,6 @@ object TextAnalysis {
     * vocabulary-grain. BpeLawsSpec pins trainer ≡ reference at
     * N = 120; a production 32k-merge run differs only in round count.
     */
-  /** Vocabulary rows per shuffle partition for the trainer's cloned
-    * iteration session — rows are short symbol strings that explode
-    * into ~|word| pair structs, so 64k rows keeps a round partition
-    * well inside executor memory while collapsing the tiny-vocab case
-    * to single-task rounds.
-    */
-  private val VocabRowsPerPartition = 1L << 16
-
   private[graft] def bpeVocabFromWf(
       spark: SparkSession, wf: DataFrame,
       merges: Int = BpeVocabMerges): DataFrame = {
@@ -2013,61 +1970,29 @@ object TextAnalysis {
         StructField("merge_count", LongType, nullable = false))))
   }
 
-  /** Scratch re-derivation cadence of the batched trainer's
-    * MAINTAINED pair-count table: every this-many rounds the counts
-    * are recomputed from the symbol state in one full
-    * vocabulary-grain job and REQUIRED equal to the differentially
-    * maintained table — a loud checksum of the incremental updates
-    * (an off-by-one in the delta accounting must fail the build, not
-    * quietly learn a different vocabulary), at 1/64th of the old
-    * per-round recount cost.
-    */
-  private[graft] val BpeRederiveEvery = 64
-
-  /** Word-table ceiling of the in-memory batched round loop — ~4M
-    * distinct words × ~100 B of symbol state ≈ a few hundred MB of
-    * driver heap, the [[lsGradientTrain]] model-grain rule applied to
-    * the tokenizer's word table (real pre-tokenized word tables are
-    * 10⁴–10⁶ rows). The pair→words inverted index (trainer AND replay
-    * encoder) adds O(distinctPairs × nWords/8) of BitSet bytes on top
-    * of the symbol state — at this bound that is the larger term
-    * (~0.5 MB per distinct adjacent pair), so RAISING the ceiling
-    * must re-estimate the index, not just the symbols (r17 ADVICE).
-    * Past it the trainer falls back to the distributed
-    * round loop, which learns the identical sequence (path-equality
-    * law in BpeLawsSpec).
+  /** Word-table ceiling of the driver replay encoder
+    * ([[bpeDriverEncodeSyms]]) — ~4M distinct words × ~100 B of
+    * symbol state ≈ a few hundred MB of driver heap, the
+    * [[lsGradientTrain]] model-grain rule applied to the tokenizer's
+    * word table (real pre-tokenized word tables are 10⁴–10⁶ rows).
+    * The pair→words inverted index adds O(distinctPairs × nWords/8)
+    * of BitSet bytes on top of the symbol state — at this bound that
+    * is the larger term (~0.5 MB per distinct adjacent pair), so
+    * RAISING the ceiling must re-estimate the index, not just the
+    * symbols. Past it [[bpeWordTokens]] keeps the chunked
+    * distributed encoder ([[bpeEncodeSyms]]); the replay-vs-chunked
+    * wall at 32k merges × 50k words (2.5 vs 1543 s) is recorded in
+    * scaling_r17/bpe_full_depth_gate.json.
     */
   private[graft] val BpeDriverLoopMaxWords = 4L << 20
 
-  /** Spark's string comparison is unsigned UTF-8 byte order; Java's
-    * is UTF-16 code-unit order — they disagree between supplementary
-    * characters and U+E000..U+FFFF, so the in-memory loop's tie-break
-    * mirrors the byte order explicitly to stay bit-identical to the
-    * distributed `orderBy`.
-    */
-  private val Utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int = {
-      val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val n = math.min(x.length, y.length)
-      var i = 0
-      while (i < n) {
-        val d = (x(i) & 0xff) - (y(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      x.length - y.length
-    }
-  }
-
   /** Initial symbol alphabet of a word, by CODE POINT — the unit the
-    * distributed trainer splits on (Spark's `substring`/`length`
-    * count code points, not UTF-16 units). A per-char split would
-    * break a supplementary character (emoji, CJK ext-B) into two
-    * lone-surrogate symbols: a DIFFERENT merge universe from the
-    * distributed loop's, and a corrupted [[Utf8Order]] tie-break
-    * (lone surrogates encode to '?' under getBytes(UTF_8)). Pinned by
-    * the non-BMP word in BpeLawsSpec's path-equality fixture.
+    * distributed trainer and encoder split on (Spark's
+    * `substring`/`length` count code points, not UTF-16 units). A
+    * per-char split would break a supplementary character (emoji,
+    * CJK ext-B) into two lone-surrogate symbols: a DIFFERENT symbol
+    * universe from the distributed fold's. Pinned by the non-BMP
+    * words in BpeLawsSpec's replay-encoder fixture.
     */
   private[graft] def codePointSymbols(w: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -2080,29 +2005,13 @@ object TextAnalysis {
     out.toArray
   }
 
-  /** The in-memory batched round loop (see the trainer's INCREMENTAL
-    * PAIR-COUNT MAINTENANCE note): per-word symbol buffers, a
-    * differentially maintained (s1,s2)→count table, and an inverted
-    * pair→word-set index so a round only recounts the words its
-    * merges can touch. The index is a SUPERSET (a word stays listed
-    * under pairs it no longer contains until its next recount) —
-    * recounting an unchanged word is a no-op, so over-approximation
-    * is harmless; missing an affected word is impossible because
-    * every recount re-registers the word's current pairs. Selection
-    * and fold semantics mirror the distributed loop exactly:
-    * top-(4·want) candidates by (count desc, s1, s2) in UTF-8 byte
-    * order, greedy symbol-disjoint take, one simultaneous
-    * (pre, last) fold pass per round.
-    */
-  /** One (pre, last) fold pass of `pairs` over a symbol sequence —
-    * the in-memory mirror of [[bpeMergeFold]]'s left-to-right scan
-    * (a just-merged symbol keeps accumulating as the LEFT operand
-    * within the pass, exactly like the column expression's `last`),
-    * shared by the batched trainer and the replay encoder so the two
-    * fold semantics cannot drift.
+  /** One left-to-right non-overlapping merge of (s1, s2) over a
+    * symbol sequence — the in-memory mirror of [[bpeMergeFold]] (the
+    * merged symbol s1s2 never re-matches s1, so "aaa" merging (a,a)
+    * yields [aa, a] on both paths).
     */
   private def foldSymbolsPass(
-      s: Array[String], pairs: Seq[(String, String)]): Array[String] = {
+      s: Array[String], s1: String, s2: String): Array[String] = {
     if (s.length < 2) s
     else {
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -2110,8 +2019,7 @@ object TextAnalysis {
       var j = 1
       while (j < s.length) {
         val x = s(j)
-        if (pairs.exists { case (s1, s2) => last == s1 && x == s2 })
-          last += x
+        if (last == s1 && x == s2) last += x
         else { out += last; last = x }
         j += 1
       }
@@ -2122,21 +2030,20 @@ object TextAnalysis {
 
   /** Driver-side REPLAY ENCODER — [[bpeEncodeSyms]]'s chunked fold
     * chain collapsed to one in-memory pass per merge over only the
-    * words whose symbol state contains that merge's pair (the batched
-    * trainer's inverted pair→words index, replaying a FROZEN list
-    * instead of learning one). Bit-identical by construction: each
-    * merge applies in training order as the same (pre, last) pass
-    * ([[foldSymbolsPass]] is shared with the trainer), and the index
-    * is a harmless superset — a stale entry replays a pair the word
-    * no longer contains, which the pass leaves unchanged. Pinned
-    * against the chunked encoder AND the plain-Scala reference fold
-    * (incl. non-BMP words) in BpeLawsSpec. The r17 full-depth gate
-    * (32k merges, 50k words) measured the chunked encoder at 1543 s —
-    * 2048 bounded-plan jobs of scheduler round-trips for a
-    * vocabulary-grain relation — which this loop replays in ~2 s;
-    * word tables past [[BpeDriverLoopMaxWords]] keep the distributed
-    * chunked path ([[bpeWordTokens]] switches on the measured count,
-    * the trainer's own collect rule).
+    * words whose symbol state contains that merge's pair (an
+    * inverted pair→words index over a FROZEN merge list). Bit-identical
+    * by construction: each merge applies in training order as the same
+    * left-to-right pass ([[foldSymbolsPass]]), and the index is a
+    * harmless superset — a stale entry replays a pair the word no
+    * longer contains, which the pass leaves unchanged. Pinned against
+    * the chunked encoder (incl. non-BMP words) in BpeLawsSpec. The
+    * full-depth gate (32k merges, 50k words,
+    * scaling_r17/bpe_full_depth_gate.json) measured the chunked
+    * encoder at 1543 s — 2048 bounded-plan jobs of scheduler
+    * round-trips for a vocabulary-grain relation — which this loop
+    * replays in 2.5 s; word tables past [[BpeDriverLoopMaxWords]] keep
+    * the distributed chunked path ([[bpeWordTokens]] switches on the
+    * measured count).
     */
   private[graft] def bpeDriverEncodeSyms(
       words: Array[String], merges: Seq[(String, String)])
@@ -2164,294 +2071,16 @@ object TextAnalysis {
       // SNAPSHOT the pair's word set before folding: register(w) can
       // grow other pairs' BitSets (fine) but also this pair's if a
       // fold ever left a residual occurrence — foldSymbolsPass's
-      // single (pre, last) pass leaves none today, yet iterating a
+      // single left-to-right pass leaves none today, yet iterating a
       // BitSet that a future edit grows mid-iteration would be
       // undefined, so the invariant is enforced structurally instead
       // of assumed (r17 ADVICE).
       where.get(pair).map(_.toArray).foreach(_.foreach { w =>
-        syms(w) = foldSymbolsPass(syms(w), pair :: Nil)
+        syms(w) = foldSymbolsPass(syms(w), pair._1, pair._2)
         register(w)
       })
     }
     syms
-  }
-
-  private[graft] def bpeDriverBatchedLoop(
-      words0: Array[(String, Long)], merges: Int, batch: Int,
-      onRound: Int => Unit = _ => ())
-      : Seq[(Long, String, String, Long)] = {
-    val nW = words0.length
-    val syms = new Array[Array[String]](nW)
-    val nws = new Array[Long](nW)
-    var i = 0
-    while (i < nW) {
-      syms(i) = codePointSymbols(words0(i)._1)
-      nws(i) = words0(i)._2
-      i += 1
-    }
-    val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-    val where = scala.collection.mutable.HashMap
-      .empty[(String, String), scala.collection.mutable.BitSet]
-    def tally(w: Int, sign: Long): Unit = {
-      val s = syms(w)
-      val n = nws(w) * sign
-      var j = 0
-      while (j < s.length - 1) {
-        val k = (s(j), s(j + 1))
-        val c = counts.getOrElse(k, 0L) + n
-        if (c == 0L) counts.remove(k) else counts(k) = c
-        if (sign > 0)
-          where.getOrElseUpdate(k, scala.collection.mutable.BitSet.empty) += w
-        j += 1
-      }
-    }
-    i = 0
-    while (i < nW) { tally(i, 1L); i += 1 }
-    def foldWord(w: Int, pairs: Seq[(String, String)]): Unit =
-      syms(w) = foldSymbolsPass(syms(w), pairs)
-    val candOrd: Ordering[(String, String, Long)] =
-      Ordering.by[(String, String, Long), Long](-_._3)
-        .orElse(Ordering.by[(String, String, Long), String](_._1)(Utf8Order))
-        .orElse(Ordering.by[(String, String, Long), String](_._2)(Utf8Order))
-    val learned = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, Long)]
-    var exhausted = false
-    var round = 0
-    while (learned.size < merges && !exhausted) {
-      round += 1
-      onRound(round)
-      val want = math.min(batch, merges - learned.size)
-      if (counts.isEmpty) exhausted = true // every word fully merged
-      else {
-        // top-(4·want) over-fetch then greedy disjoint — the exact
-        // selection the distributed loop runs (a thin fetch can
-        // starve a round; 4× is the measured-sufficient margin).
-        // Bounded max-heap selection, not a full sort: the counts
-        // table holds O(adjacency types) entries and a full
-        // O(P log P) sort per round was most of the measured
-        // 16.8 ms/merge — the heap keeps its WORST kept candidate on
-        // top and most entries fail the guard without a push
-        val k = 4 * want
-        val heap = new scala.collection.mutable
-          .PriorityQueue[(String, String, Long)]()(candOrd)
-        counts.foreach { case ((s1, s2), c) =>
-          val cand = (s1, s2, c)
-          if (heap.size < k) heap.enqueue(cand)
-          else if (candOrd.compare(cand, heap.head) < 0) {
-            heap.dequeue(); heap.enqueue(cand)
-          }
-        }
-        val top = heap.dequeueAll.reverse // best-first under candOrd
-        val used = scala.collection.mutable.Set.empty[String]
-        val picked = top.iterator
-          .filter { case (s1, s2, _) =>
-            // disjoint on the pair's symbols AND its merged string: a
-            // later pick reading (or producing) a symbol another pick
-            // produces (or reads) would make the simultaneous fold
-            // order-dependent
-            if (used(s1) || used(s2) || used(s1 + s2)) false
-            else { used += s1; used += s2; used += s1 + s2; true }
-          }.take(want).toSeq
-        picked.foreach { case (s1, s2, c) =>
-          learned += ((learned.size + 1L, s1, s2, c))
-        }
-        val foldPairs = picked.map { case (s1, s2, _) => (s1, s2) }
-        val affected = scala.collection.mutable.BitSet.empty
-        foldPairs.foreach(p => where.get(p).foreach(affected |= _))
-        affected.foreach { w =>
-          tally(w, -1L)
-          foldWord(w, foldPairs)
-          tally(w, 1L)
-        }
-        if (round % BpeRederiveEvery == 0) {
-          val fresh = scala.collection.mutable
-            .HashMap.empty[(String, String), Long]
-          var w = 0
-          while (w < nW) {
-            val s = syms(w)
-            var j = 0
-            while (j < s.length - 1) {
-              val k = (s(j), s(j + 1))
-              fresh(k) = fresh.getOrElse(k, 0L) + nws(w)
-              j += 1
-            }
-            w += 1
-          }
-          require(fresh == counts,
-            s"BPE maintained pair counts diverged from scratch at round $round")
-        }
-      }
-    }
-    learned.toSeq
-  }
-
-  /** The distributed batched round loop — the ≫[[BpeDriverLoopMaxWords]]
-    * fallback: one vocabulary-grain pair-count job per round
-    * (TakeOrdered top-(4·want)), one simultaneous fold projection,
-    * lineage checkpointed every [[BpeCheckpointEvery]] rounds.
-    * Measured 456 ms/merge at the 512-merge/batch=8/50k-word probe
-    * (the cost is re-evaluating the interpreted fold lambdas over the
-    * full state each round — which is also why an incremental-delta
-    * variant of THIS loop measured neutral, 486 ms/merge: the delta
-    * job still folds the full state to evaluate its filter).
-    */
-  private def bpeDistributedBatchedLoop(
-      spark: SparkSession, wf: DataFrame, merges: Int, batch: Int)
-      : Seq[(Long, String, String, Long)] = {
-    val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    val state0 = wf
-      .select(array_join(
-          expr("transform(sequence(1, length(t)), i -> substring(t, i, 1))"),
-          BpeSep).as("syms"),
-        col("n_w"))
-      .localCheckpoint(true, disk)
-    // same cloned-session shuffle-width discipline as the exact loop
-    val iter = spark.newSession()
-    iter.conf.set("spark.sql.adaptive.enabled", "false")
-    val vocabRows = state0.count()
-    val maxParts = spark.sessionState.conf.numShufflePartitions.toLong
-    val parts = math.max(1L, math.min(maxParts,
-      vocabRows / VocabRowsPerPartition + 1)).toInt
-    iter.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    var state = iter.createDataFrame(state0.rdd, state0.schema).coalesce(parts)
-    var free = graft.Lineage.checkpointRelease(state0)
-    val learned = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, Long)]
-    var exhausted = false
-    var round = 0
-    while (learned.size < merges && !exhausted) {
-      round += 1
-      val want = math.min(batch, merges - learned.size)
-      val a = split(col("syms"), BpeSep)
-      // over-fetch 4× candidates: greedy disjoint selection discards
-      // overlapping pairs, and a thin fetch could starve a round
-      val top = state.filter(col("syms").contains(BpeSep))
-        .select(col("n_w"), explode(transform(
-          slice(a, lit(1), size(a) - 1),
-          (x, i) => struct(x.as("s1"), element_at(a, i + lit(2)).as("s2"))))
-          .as("p"))
-        .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
-        .agg(sum(col("n_w")).as("merge_count"))
-        .orderBy(col("merge_count").desc, col("s1").asc, col("s2").asc)
-        .limit(4 * want).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val picked = top.iterator.map { r =>
-          (r.getString(0), r.getString(1), r.getLong(2))
-        }.filter { case (s1, s2, _) =>
-          // disjoint on the pair's symbols AND its merged string: a
-          // later pick reading (or producing) a symbol another pick
-          // produces (or reads) would make the stacked folds
-          // order-dependent
-          if (used(s1) || used(s2) || used(s1 + s2)) false
-          else { used += s1; used += s2; used += s1 + s2; true }
-        }.take(want).toSeq
-        picked.foreach { case (s1, s2, c) =>
-          learned += ((learned.size + 1L, s1, s2, c))
-        }
-        // disjoint folds commute — apply the whole round in ONE fold
-        // pass (bpeMergeFoldAll): stacking them as nested projections
-        // blows the collapsed plan up ~4^batch (measured: batch=8
-        // never finishes round 3), while the simultaneous pass is
-        // equivalent by disjointness and O(batch)-sized
-        val merged = state.select(
-          bpeMergeFoldAll(col("syms"),
-            picked.map { case (s1, s2, _) => (s1, s2) }).as("syms"),
-          col("n_w"))
-        if (round % BpeCheckpointEvery == 0) {
-          val next = merged.localCheckpoint(true, disk)
-          free()
-          free = graft.Lineage.checkpointRelease(next)
-          state = next
-        } else state = merged
-      }
-    }
-    free()
-    learned.toSeq
-  }
-
-  /** Batched-merge BPE trainer — the PRODUCTION-scale variant of
-    * [[bpeVocabFromWf]]: per round, up to `batch` SYMBOL-DISJOINT top
-    * pairs are selected (greedy by the exact trainer's (count desc,
-    * s1, s2) order, skipping any pair sharing a symbol with one
-    * already taken this round), and all of them fold in one stacked
-    * projection pass. Rounds ≈ merges/batch, so a 32k-merge tokenizer
-    * costs ~32k/batch sequential driver round-trips instead of 32k —
-    * the ceiling the exact trainer documents.
-    *
-    * LOUD SEMANTIC FLAG — `batch > 1` LEARNS A DIFFERENT MERGE
-    * SEQUENCE (and hence a different vocabulary) than reference
-    * sequential BPE: within a round the 2nd..batch-th selections use
-    * PRE-round counts, while exact BPE recounts after every merge, so
-    * the two sequences diverge as soon as an exact pick would have
-    * involved a symbol merged earlier in the same round. Measured:
-    * ~18 % merge-set divergence at batch=8 over the first 160 merges
-    * of a 50k-word Zipf table, and the divergence is FIXTURE-DEPENDENT
-    * and non-monotone in batch (0.6–42 % across batch sizes on the
-    * BpeLawsSpec census fixture — one early different pick cascades)
-    * while ENCODE QUALITY stays within 1 % of the exact list
-    * (sometimes better): the census law pins quality within 8 % and
-    * bounds the set divergence. Batch=1 ≡ exact BPE always; batch>1
-    * is a throughput knob for train-once tokenizers whose consumers
-    * accept a batched-greedy vocabulary.
-    * Symbol-disjointness makes the folds commute (merging (a,b)
-    * cannot create, destroy, or split an occurrence of (c,d) when
-    * {a,b} ∩ {c,d} = ∅), so the folded STATE equals the exact
-    * trainer's state whenever the selected pairs would have been the
-    * next `batch` exact picks — BpeLawsSpec pins batch=1 ≡ exact on
-    * the corpus recipe and batch>1 ≡ exact on a disjoint-top fixture.
-    * Disjointness also keeps the recorded merge_counts EXACT (a
-    * disjoint merge joins two symbols in place, so it neither creates
-    * nor destroys any other disjoint pair's adjacencies).
-    * `text_bpe_vocab` / the serving encoder stay on the exact trainer.
-    *
-    * INCREMENTAL PAIR-COUNT MAINTENANCE (the per-round cost): the
-    * word-frequency table is VOCABULARY grain — the same grain as the
-    * Gram matrix in [[lsGradientTrain]] — so the production path
-    * follows the same fold-once-iterate-on-the-driver rule: collect
-    * the word table once, then run the round loop in memory with
-    * differentially maintained pair counts (merging (s1,s2) only
-    * changes counts in words CONTAINING that adjacency, tracked by an
-    * inverted pair→words index — the single-node state every
-    * production BPE trainer holds; Sennrich's reference and HF
-    * tokenizers are exactly this loop). MEASURED at the 512-merge /
-    * batch=8 / 50k-word probe: 456 ms/merge (distributed round loop,
-    * dominated by re-evaluating interpreted fold lambdas over the
-    * full state each round) → the in-memory loop retires the Spark
-    * job per round entirely. Every [[BpeRederiveEvery]] rounds the
-    * maintained counts are re-derived from the symbol state and
-    * REQUIRED equal (loud checksum of the differential updates). A
-    * word table past [[BpeDriverLoopMaxWords]] falls back to the
-    * distributed round loop below — BIT-IDENTICAL merge sequences
-    * (BpeLawsSpec pins path equality on random corpora): both paths
-    * select from the same total order with the same top-(4·want)
-    * candidate fetch, and the in-memory fold mirrors
-    * [[bpeMergeFoldAll]]'s (pre, last) pass.
-    */
-  private[graft] def bpeVocabBatchedFromWf(
-      spark: SparkSession, wf: DataFrame,
-      merges: Int = BpeVocabMerges, batch: Int = 8,
-      driverLoopMaxWords: Long = BpeDriverLoopMaxWords): DataFrame = {
-    val nWords = wf.count()
-    val learned: Seq[(Long, String, String, Long)] =
-      if (nWords <= driverLoopMaxWords)
-        bpeDriverBatchedLoop(
-          wf.select(col("t"), col("n_w")).collect()
-            .map(r => (r.getString(0), r.getLong(1))), merges, batch)
-      else bpeDistributedBatchedLoop(spark, wf, merges, batch)
-    val rows = learned.toSeq.map { case (step, s1, s2, c) =>
-      org.apache.spark.sql.Row(step, s1, s2, s1 + s2, c)
-    }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("step", LongType, nullable = false),
-        StructField("s1", StringType, nullable = false),
-        StructField("s2", StringType, nullable = false),
-        StructField("merged", StringType, nullable = false),
-        StructField("merge_count", LongType, nullable = false))))
   }
 
   /** Counter budget for [[heavyHitters]]: tokens above 1/32 of corpus

@@ -1,7 +1,8 @@
 package graft.functions.expressions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -172,30 +173,57 @@ object GraftFunctions {
   val ShingleName = "graft_shingle_hashes"
   val CellTopName = "graft_cell_top_k"
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineDName, exprs => CosineSimilarityD(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotIntName, exprs => DotProductInt(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      WSqDistName, exprs => WeightedSqDist(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsofName, exprs => AsofLast(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ShingleName, {
+  /** Every native expression as one (name, info, builder) row — the
+    * single table both registration paths iterate: [[register]] per
+    * session, [[GraftExtensions]] via `spark.sql.extensions`.
+    */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn(name: String, usage: String)(builder: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name),
+        new ExpressionInfo(getClass.getName.stripSuffix("$"), null, name, usage,
+          "", "", "", "", "", "", "built-in"),
+        builder)
+    Seq(
+      fn(CosineName,
+        "cosine similarity of two array<float> vectors (fused single pass)")(
+        exprs => CosineSimilarity(exprs(0), exprs(1))),
+      fn(CosineDName,
+        "cosine of array<float> against array<double>, double accumulation")(
+        exprs => CosineSimilarityD(exprs(0), exprs(1))),
+      fn(DotName,
+        "dot product of an array<float> vector with an array<double> constant")(
+        exprs => DotProduct(exprs(0), exprs(1))),
+      fn(DotIntName,
+        "exact integer dot of two array<int> code vectors, long accumulation")(
+        exprs => DotProductInt(exprs(0), exprs(1))),
+      fn(WSqDistName,
+        "diagonal-Mahalanobis weighted squared distance to a constant center")(
+        exprs => WeightedSqDist(exprs(0), exprs(1), exprs(2))),
+      fn(AsofName,
+        "last struct of a sorted timeline array with t <= key (as-of probe)")(
+        exprs => AsofLast(exprs(0), exprs(1))),
+      fn(ShingleName,
+        "xxhash64 of word n-grams (default n=5), distinct unless the third argument is false")({
         case Seq(text) => ShingleHashes(text, 5)
         case Seq(text, n) => ShingleHashes(text, n.eval().asInstanceOf[Int])
         case exprs => ShingleHashes(exprs(0),
           exprs(1).eval().asInstanceOf[Int],
           exprs(2).eval().asInstanceOf[Boolean])
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CellTopName, exprs => CellTopK(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
+      }),
+      fn(CellTopName,
+        "top-k quantizer cells of a vector by (cosine desc, cell asc)")(
+        exprs => CellTopK(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])))
+  }
+
+  /** Registers [[functions]] into the session's registry, skipping
+    * names it already holds (an earlier call, or the extension path)
+    * so repeated calls do not re-register and log a replacement WARN.
+    */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 
   /** Column-API handle: `cosineSim($"a", $"b")`. */

@@ -1,64 +1,15 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Production registration surface: ship the engine's native
   * expressions to every session of a deployment via
   * `spark.sql.extensions=graft.functions.expressions.GraftExtensions`
   * (spark-submit / cluster conf), instead of the per-session
   * [[GraftFunctions.register]] call the library entry points make.
-  * Both paths register the same expressions under the same names.
+  * Both paths iterate the same [[GraftFunctions.functions]] table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.CosineName),
-      info(GraftFunctions.CosineName,
-        "cosine similarity of two array<float> vectors (fused single pass)"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.CosineDName),
-      info(GraftFunctions.CosineDName,
-        "cosine of array<float> against array<double>, double accumulation"),
-      (exprs: Seq[Expression]) => CosineSimilarityD(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.DotName),
-      info(GraftFunctions.DotName,
-        "dot product of an array<float> vector with an array<double> constant"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.AsofName),
-      info(GraftFunctions.AsofName,
-        "last struct of a sorted timeline array with t <= key (as-of probe)"),
-      (exprs: Seq[Expression]) => AsofLast(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.ShingleName),
-      info(GraftFunctions.ShingleName,
-        "distinct xxhash64 of word n-grams (default n=5), one pass"),
-      (exprs: Seq[Expression]) =>
-        if (exprs.length == 1) ShingleHashes(exprs(0), 5)
-        else ShingleHashes(exprs(0), exprs(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.WSqDistName),
-      info(GraftFunctions.WSqDistName,
-        "diagonal-Mahalanobis weighted squared distance to a constant center"),
-      (exprs: Seq[Expression]) => WeightedSqDist(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.DotIntName),
-      info(GraftFunctions.DotIntName,
-        "exact integer dot of two array<int> code vectors, long accumulation"),
-      (exprs: Seq[Expression]) => DotProductInt(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.CellTopName),
-      info(GraftFunctions.CellTopName,
-        "top-k quantizer cells of a vector by (cosine desc, cell asc)"),
-      (exprs: Seq[Expression]) => CellTopK(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int])))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.functions.foreach(ext.injectFunction)
 }

@@ -1044,33 +1044,15 @@ class OperatorSpec extends AnyFunSuite {
     // expressions first is broken in isolation (emb_outliers regressed
     // exactly this way). Wipe, then analyze every declared plan.
     val reg = spark.sessionState.functionRegistry
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    Seq(
-      graft.functions.expressions.GraftFunctions.CosineName,
-      graft.functions.expressions.GraftFunctions.CosineDName,
-      graft.functions.expressions.GraftFunctions.DotName,
-      graft.functions.expressions.GraftFunctions.DotIntName,
-      graft.functions.expressions.GraftFunctions.WSqDistName,
-      graft.functions.expressions.GraftFunctions.AsofName,
-      graft.functions.expressions.GraftFunctions.ShingleName,
-      graft.functions.expressions.GraftFunctions.CellTopName)
-      .foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+    def wipe(): Unit =
+      GraftFunctions.functions.foreach { case (id, _, _) => reg.dropFunction(id) }
     SparkEntry.queries.foreach { case (name, fn) =>
-      Seq(
-        graft.functions.expressions.GraftFunctions.CosineName,
-        graft.functions.expressions.GraftFunctions.CosineDName,
-        graft.functions.expressions.GraftFunctions.DotName,
-        graft.functions.expressions.GraftFunctions.DotIntName,
-        graft.functions.expressions.GraftFunctions.WSqDistName,
-        graft.functions.expressions.GraftFunctions.AsofName,
-        graft.functions.expressions.GraftFunctions.ShingleName,
-        graft.functions.expressions.GraftFunctions.CellTopName)
-        .foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+      wipe()
       withClue(name) {
         fn(spark, sf).queryExecution.analyzed // analysis resolves or throws
       }
     }
-    graft.functions.expressions.GraftFunctions.register(spark) // restore for later suites
+    GraftFunctions.register(spark) // restore for later suites
   }
 
   test("misra-gries: guaranteed superset over a vocab far exceeding k, exact confirm thresholds") {
@@ -1623,12 +1605,34 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions applies its injections to a fresh SparkSessionExtensions") {
-    // a full end-to-end check needs a new SparkContext (extensions are
-    // applied at session construction); this pins the injector wiring —
-    // the expressions themselves are SQL-exercised via the
-    // GraftFunctions.register path in the other suites
+    // extensions are applied at session construction, so the injected
+    // functions are registered into a fresh registry through the
+    // method a new session calls (private[sql], hence reflection), and
+    // the built expressions are evaluated against the register path
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
+    import org.apache.spark.sql.catalyst.expressions.Literal
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.functions.expressions.GraftExtensions()(ext)
+    val extReg = new SimpleFunctionRegistry
+    classOf[org.apache.spark.sql.SparkSessionExtensions]
+      .getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, extReg)
+    GraftFunctions.register(spark)
+    val sessionReg = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier(GraftFunctions.ShingleName)
+    // 6 words → 5 bigram instances, 2 distinct bigrams
+    val text = Literal("a b a b a b")
+    def hashes(reg: FunctionRegistry, args: Literal*): Int =
+      reg.lookupFunction(id, args.toSeq).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements()
+    for (reg <- Seq(extReg, sessionReg)) {
+      assert(hashes(reg, text, Literal(2), Literal(false)) === 5)
+      assert(hashes(reg, text, Literal(2), Literal(true)) === 2)
+      assert(hashes(reg, text, Literal(2)) === 2)
+    }
+    assert(extReg.listFunction().map(_.funcName).toSet ===
+      GraftFunctions.functions.map(_._1.funcName).toSet)
   }
 
   test("multimodal decode is deterministic and complete") {
