@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The bench's engine-owned-storage ingest, factored so dev tooling
-  * ([[Explain]]) can reproduce or ADOPT the exact layout [[Bench]]
-  * queries run against — bucketed fact catalog tables + repartitioned
-  * plain parquet — instead of silently auditing raw single-file scan
-  * plans that the bench never executes.
+/** The bench's engine-owned-storage ingest, shared so [[Explain]]
+  * prints plans over the exact layout [[Bench]] queries run against —
+  * bucketed fact catalog tables + repartitioned plain parquet — not
+  * raw single-file scans that the bench never executes.
   */
 object BenchIngest {
 
@@ -29,11 +28,6 @@ object BenchIngest {
     "customer" -> 2, "part" -> 2, "supplier" -> 1,
     "nation" -> 1, "region" -> 1)
 
-  private[graft] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
-
   /** Fresh ingest (what [[Bench]] runs): clear any previous process's
     * managed locations, load the raw driver parquet into bucketed
     * catalog tables / repartitioned parquet, point [[Tables]] and
@@ -45,8 +39,8 @@ object BenchIngest {
     // a previous process's managed-table locations are unknown to this
     // session's fresh in-memory catalog — clear them or saveAsTable
     // fails with LOCATION_ALREADY_EXISTS
-    rmTree(new java.io.File(s"$warehouse/catalog"))
-    rmTree(new java.io.File(s"$warehouse/index"))
+    Warehouse.deleteRecursively(new java.io.File(s"$warehouse/catalog"))
+    Warehouse.deleteRecursively(new java.io.File(s"$warehouse/index"))
     spark.conf.set(IndexStore.IndexDirKey, s"$warehouse/index")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -66,35 +60,6 @@ object BenchIngest {
             .write.mode("overwrite").parquet(s"$warehouse/$t.parquet")
       }
     }}, Duration.Inf)
-    spark.conf.set(Tables.CatalogDirKey, warehouse)
-  }
-
-  /** Adopt a PREVIOUS bench process's warehouse without rewriting it:
-    * register the bucketed fact locations as external bucketed tables
-    * (identical scan plans — catalog bucketing metadata drives the
-    * planner the same way for managed and external tables) and point
-    * [[IndexStore]] at the existing index dir with orphan adoption on,
-    * so a later session resolves the already-built index tables
-    * scan-only instead of rebuilding them. Dev tooling only — the
-    * bench itself always re-ingests (no cross-run precomputation).
-    */
-  def adopt(spark: SparkSession, sfDir: String, warehouse: String): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.All.foreach { t =>
-      Bucketed.get(t).foreach { case (key, n) =>
-        val loc = s"$warehouse/catalog/$t"
-        require(new java.io.File(loc).isDirectory,
-          s"adopt: missing bucketed table dir $loc — run Bench first")
-        // bucketed DDL requires an explicit column list — infer it
-        // from the parquet files at the location
-        val ddl = spark.read.parquet(loc).schema.toDDL
-        spark.sql(s"""CREATE TABLE IF NOT EXISTS `$t` ($ddl) USING parquet
-          CLUSTERED BY (`$key`) SORTED BY (`$key`) INTO $n BUCKETS
-          LOCATION '$loc'""")
-      }
-    }
-    spark.conf.set(IndexStore.IndexDirKey, s"$warehouse/index")
-    spark.conf.set(IndexStore.AdoptOrphansKey, "true")
     spark.conf.set(Tables.CatalogDirKey, warehouse)
   }
 }

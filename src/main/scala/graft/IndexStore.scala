@@ -25,16 +25,6 @@ object IndexStore {
   /** Conf key: directory for persisted index tables (opt-in). */
   val IndexDirKey = "spark.graft.indexDir"
 
-  /** Conf key (dev tooling): when "true", an index table that is
-    * missing from this session's catalog but whose data directory
-    * already exists under [[IndexDirKey]] (built by a PREVIOUS bench
-    * process — in-memory catalogs don't survive the JVM) is adopted
-    * as an external bucketed table over that location instead of
-    * rebuilt. The bench never sets this: it clears the index dir and
-    * rebuilds, so measured numbers never ride a prior run's artifacts.
-    */
-  val AdoptOrphansKey = "spark.graft.indexAdoptOrphans"
-
   /** Bucket count every persisted index table uses — public so a
     * build that must cluster by the bucket key anyway (e.g. the
     * shingle/winnow df-census join) can pre-partition identically and
@@ -61,23 +51,6 @@ object IndexStore {
     spark.conf.getOption(IndexDirKey).map { dir =>
       Warehouse.attach(spark, Db, dir)
       val tbl = s"$Db.${sanitize(sfDir)}__$name"
-      val loc = new java.io.File(
-        s"$dir/${sanitize(sfDir)}__$name")
-      if (!spark.catalog.tableExists(tbl) &&
-          spark.conf.getOption(AdoptOrphansKey).contains("true") &&
-          loc.isDirectory && loc.list().nonEmpty) {
-        // files were written by bucketBy with these same parameters
-        // (same code path), so the declared metadata matches the
-        // on-disk bucket-id file naming
-        val clustered = bucketCol.map(c =>
-          s"CLUSTERED BY (`$c`) SORTED BY (`$c`) INTO $nBuckets BUCKETS")
-          .getOrElse("")
-        // bucketed DDL requires an explicit column list — infer it
-        // from the parquet files at the location
-        val ddl = spark.read.parquet(loc.getAbsolutePath).schema.toDDL
-        spark.sql(s"""CREATE TABLE `$Db`.`${sanitize(sfDir)}__$name`
-          ($ddl) USING parquet $clustered LOCATION '${loc.getAbsolutePath}'""")
-      }
       if (!spark.catalog.tableExists(tbl)) {
         // repartition on the bucket key BEFORE bucketBy: without it each
         // write task emits a fragment per bucket (tasks × buckets tiny

@@ -7,6 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `queries` aggregates every operator module's registry; each entry has
   * a DuckDB-dialect oracle in `oracleSql` unless the operator is not
   * SQL-expressible (then the driver records a rows-only check).
+  *
+  * Queries call the `graft_*` kernels but never register them: the
+  * session must hold them already, from
+  * [[functions.expressions.GraftExtensions]] (which [[GraftSession]]
+  * sets) or from [[functions.expressions.GraftFunctions.register]].
   */
 object SparkEntry {
 

@@ -1,27 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs on the
+  * [[GraftSession]] profile, the settings Bench times its plans under. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // dev convenience: an optional comma-separated third arg narrows the
     // run to named queries (the driver always runs the full set)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local mode has no task retries, so the determinism sort before
-      // round-robin repartition is pure overhead
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      Files.createTempDirectory("graft-verify-warehouse").toString)
     new java.io.File(outDir).mkdirs()
-    graft.functions.expressions.GraftFunctions.register(spark)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

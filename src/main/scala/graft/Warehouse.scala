@@ -41,12 +41,15 @@ object Warehouse {
     */
   def cleanup(spark: SparkSession, name: String, auxDirs: Seq[String] = Nil): Unit = {
     spark.sql(s"DROP DATABASE IF EXISTS `$name` CASCADE")
-    auxDirs.foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(d))
-    }
+    auxDirs.foreach(d => deleteRecursively(new java.io.File(d)))
+  }
+
+  /** Deletes `f` and everything under it; a missing file, or a
+    * directory that vanishes mid-walk (`listFiles` returns null), is
+    * not an error.
+    */
+  def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
   }
 }

@@ -118,7 +118,6 @@ object Dedup {
 
   private[graft] def explodedShingleHashes(spark: SparkSession, sfDir: String): DataFrame =
     shingleCache.getOrElseUpdate(spark, sfDir) {
-      graft.functions.expressions.GraftFunctions.register(spark)
       import graft.functions.expressions.GraftFunctions.shingleHashes
       // set size rides along with each exploded row, so the pair
       // aggregation needs no extra size-lookup joins afterwards.
@@ -576,7 +575,6 @@ object Dedup {
     * locality), so its exchange carries ~one row per document.
     */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleHashes
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), shingleHashes(col("text")).as("hs"))
@@ -705,7 +703,6 @@ object Dedup {
 
   private[graft] def bloomIndex(spark: SparkSession, sfDir: String): (DataFrame, Long) =
     bloomCache.getOrElseUpdate(spark, sfDir) {
-      graft.functions.expressions.GraftFunctions.register(spark)
       import graft.functions.expressions.GraftFunctions.shingleHashes
       val bench = Tables.documents(spark, sfDir)
         .filter(col("doc_id") < BenchmarkDocs)
@@ -748,7 +745,6 @@ object Dedup {
     }.reduce(_ && _)
 
   def decontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleHashes
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), shingleHashes(col("text")).as("hs"))

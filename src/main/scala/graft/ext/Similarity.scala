@@ -110,7 +110,6 @@ object Similarity {
 
   private[graft] def lshIndex(spark: SparkSession, sfDir: String): LshIndex =
     bucketedCache.getOrElseUpdate(spark, sfDir) {
-      GraftFunctions.register(spark)
       val src = Tables.embeddings(spark, sfDir)
       // one exact count per (session, dir) at index build — parquet
       // metadata-cheap, amortized with the index itself
@@ -168,7 +167,6 @@ object Similarity {
     * heap-trimmed partial top-K.
     */
   def bruteforceTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -200,7 +198,6 @@ object Similarity {
     * against.
     */
   def mipsTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -275,7 +272,6 @@ object Similarity {
     * on the Dataset would be a no-op).
     */
   def kcenterCoreset(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // the corpus enters through the memoized bucketed frame so the
     // initial state build is a cache/warehouse scan, not a fresh
     // parquet decode
@@ -362,7 +358,6 @@ object Similarity {
     * scan regardless.
     */
   def dimAblation(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -415,7 +410,6 @@ object Similarity {
     */
   private[graft] def knnEdges(spark: SparkSession, sfDir: String): DataFrame =
     knnEdgeCache.getOrElseUpdate(spark, sfDir) {
-      GraftFunctions.register(spark)
       val emb = bucketedEmb(spark, sfDir)
       val cand = emb.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"), col("bucket").as("c_bucket"))
@@ -651,7 +645,6 @@ object Similarity {
     * candidate join.
     */
   def hardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -762,7 +755,6 @@ object Similarity {
     */
   private[graft] def semAssigned(spark: SparkSession, sfDir: String): DataFrame =
     semAssignCache.getOrElseUpdate(spark, sfDir) {
-      GraftFunctions.register(spark)
       val emb = Tables.embeddings(spark, sfDir)
       val k = semCellsFor(emb.count())
       val quant = emb.filter(col("vec_id") < k)
@@ -778,7 +770,6 @@ object Similarity {
     }
 
   def semDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val assigned = semAssigned(spark, sfDir)
     semDedupFrom(assigned, semCellCap(Tables.embeddings(spark, sfDir).count()))
   }
@@ -841,7 +832,6 @@ object Similarity {
     * all-pairs. Output is ≤ 3 rows.
     */
   def lexSemAgreement(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val assigned = semAssigned(spark, sfDir)
     val cap = semCellCap(Tables.embeddings(spark, sfDir).count())
     val sem = semPairsFrom(assigned, cap)
@@ -882,7 +872,6 @@ object Similarity {
     * decision is integer arithmetic.
     */
   def lexSemCalibration(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val assigned = semAssigned(spark, sfDir)
     val cap = semCellCap(Tables.embeddings(spark, sfDir).count())
     val sem = semPairsFrom(assigned, cap)
@@ -912,7 +901,6 @@ object Similarity {
     * buys throughput with.
     */
   def annLshTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = bucketedEmb(spark, sfDir)
     val q = emb.filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -965,7 +953,6 @@ object Similarity {
 
   def annLshMultiProbe(
       spark: SparkSession, sfDir: String, nProbeOpt: Option[Int] = None): DataFrame = {
-    GraftFunctions.register(spark)
     val idx = lshIndex(spark, sfDir)
     // default probe set = own bucket + every Hamming-1 neighbor of the
     // DERIVED plane count (so the probe fan-out tracks the signature
@@ -1016,7 +1003,6 @@ object Similarity {
     * documented single-index tradeoff, measured by [[recallEval]].
     */
   def rangeSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idx = lshIndex(spark, sfDir)
     val emb = idx.df
     val q = probedQueries(emb, 1 + idx.numPlanes)
@@ -1060,7 +1046,6 @@ object Similarity {
 
   private[graft] def ivfIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     ivfIndexCache.getOrElseUpdate(spark, sfDir) {
-      GraftFunctions.register(spark)
       val emb = Tables.embeddings(spark, sfDir)
       def buildQuant = emb
         .agg(graft.functions.CentroidAgg.centroids(
@@ -1085,7 +1070,6 @@ object Similarity {
     }
 
   def ivfTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     // Index build — a separate stage from search in every real IVF
     // system. Centroids accumulate in ONE global typed aggregation
@@ -1151,7 +1135,6 @@ object Similarity {
     */
   private[graft] def ivfBaseIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     ivfBaseCache.getOrElseUpdate(spark, sfDir) {
-      GraftFunctions.register(spark)
       val landed = Tables.embeddings(spark, sfDir)
         .filter(pmod(col("vec_id"), lit(2)) === 0)
       def buildQuant = landed
@@ -1199,7 +1182,6 @@ object Similarity {
     * broadcasts the query side.
     */
   def ivfIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val (quant, base) = ivfBaseIndex(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     val delta = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
@@ -1305,7 +1287,6 @@ object Similarity {
 
   private[graft] def sq8Index(spark: SparkSession, sfDir: String): DataFrame =
     sq8Cache.getOrElseUpdate(spark, sfDir) {
-      GraftFunctions.register(spark)
       def build = quantizeVectors(spark, sfDir).select(col("vec_id"), col("q"))
         .withColumn("qaa", GraftFunctions.vectorDotInt(col("q"), col("q")))
         .filter(col("qaa") > 0)
@@ -1314,7 +1295,6 @@ object Similarity {
     }
 
   def sq8TopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     import GraftFunctions.vectorDotInt
     val codes = sq8Index(spark, sfDir)
     val qcodes = codes.filter(col("vec_id") < NumQueryVecs)
@@ -1384,7 +1364,6 @@ object Similarity {
     * [[quantizeInt8]].
     */
   def rpSketch(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, sfDir).select(
       col("vec_id") +:
         (0 until RpDim).map(j =>
@@ -1393,7 +1372,6 @@ object Similarity {
   }
 
   def embStats(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val asD = transform(col("embedding"), x => x.cast("double"))
     Tables.embeddings(spark, sfDir).select(
       col("vec_id"),
@@ -1480,7 +1458,6 @@ object Similarity {
     * would be lost to the narrower lane.
     */
   def embLabelCohesion(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val cen = Tables.embeddings(spark, sfDir)
       .agg(graft.functions.CentroidAgg.centroids(
         col("label").cast("long"), col("embedding")).as("raw"))
@@ -1507,7 +1484,6 @@ object Similarity {
     * stays linear in n even under adversarial input.
     */
   def embNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idx = lshIndex(spark, sfDir)
     embNearDupFrom(idx.df, hotBucketCap(idx.n, idx.numPlanes))
   }
@@ -1556,7 +1532,6 @@ object Similarity {
     * tranche id the same way.
     */
   def embIncrementalNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idx = lshIndex(spark, sfDir)
     val cap = hotBucketCap(idx.n, idx.numPlanes)
     val cold = coldBuckets(idx.df, cap)
@@ -1686,7 +1661,6 @@ object Similarity {
     * instead of random directions.
     */
   def pcaProject(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val comps = pcaComponents(spark, sfDir, k)
     val mean = {
       val g = Tables.embeddings(spark, sfDir)
@@ -1729,7 +1703,6 @@ object Similarity {
     * operands in identical index order in both engines.
     */
   def outlierScores(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val g = Tables.embeddings(spark, sfDir)
       .agg(graft.functions.GramAgg.gram(col("embedding")).as("g"))
       .select(col("g._1").as("n"), col("g._2").as("s"), col("g._3").as("t"))
@@ -1781,7 +1754,6 @@ object Similarity {
     * checker cannot order array cells, the [[quantize]] contract).
     */
   def kmeansStep(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val quant = emb.filter(col("vec_id") < KmeansK)
       .agg(collect_list(struct(col("vec_id").as("cell"), col("embedding").as("cw")))
@@ -2056,7 +2028,6 @@ object Similarity {
     * SQL mirror of both stages.
     */
   def ivfPqTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val (quant, assigned) = ivfIndex(spark, sfDir)
     val probes = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < NumQueryVecs)

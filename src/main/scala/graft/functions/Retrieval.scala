@@ -174,7 +174,6 @@ object Retrieval {
     */
   def hybridRrf(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.expressions.GraftFunctions.register(spark)
     // rank AFTER a distributed TakeOrdered trim: the single-partition
     // row_number window only ever sees RrfDepth rows, never the corpus
     val bmW = Window.orderBy(col("score_e6").desc, col("doc_id").asc)
@@ -394,7 +393,6 @@ object Retrieval {
     */
   def hybridRrfMulti(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.expressions.GraftFunctions.register(spark)
     val bm = multiScores(spark, sfDir)
       .filter(col("doc_id") =!= col("query_id"))
       .groupBy("query_id")

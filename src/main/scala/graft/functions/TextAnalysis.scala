@@ -1486,7 +1486,6 @@ object TextAnalysis {
     * set, not the span universe.
     */
   def boilerplateSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleHashes
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), shingleHashes(col("text")).as("hs"))
@@ -2227,7 +2226,6 @@ object TextAnalysis {
     * Σ lp·k / Σ k.
     */
   def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleInstanceHashes
     // pre-aggregate BELOW the model join (asserted in PlanShapeSpec);
     // token hashing runs in the one-pass compiled kernel (each hash =
@@ -2353,7 +2351,6 @@ object TextAnalysis {
     * persists to the warehouse bucketed on t1.
     */
   def bigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleInstanceHashes
     // bigrams collapse to 64-bit keys before the pre-aggregate and the
     // model join — see [[unigramLogprob]] for the exchange-width
@@ -2422,7 +2419,6 @@ object TextAnalysis {
     if (spark.conf.getOption(graft.IndexStore.IndexDirKey).isDefined)
       return bigramModel(spark, sfDir)
         .select(xxhash64(concat_ws(" ", col("t1"), col("t2"))).as("bh"), col("lp"))
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleInstanceHashes
     val pairs = Tables.documents(spark, sfDir)
       .select(shingleInstanceHashes(col("text"), 2).as("bh_arr"),
@@ -2521,7 +2517,6 @@ object TextAnalysis {
     * not token instances) when a real vocabulary outgrows it.
     */
   def oovRate(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleInstanceHashes
     val docTok = Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(shingleInstanceHashes(col("text"), 1)).as("th"))

@@ -159,9 +159,11 @@ case class CosineSimilarityD(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the engine's native expressions, so they
-  * are callable from both the Column API (`call_function`) and SQL.
-  * Idempotent; every query entry point calls it.
+/** The engine's native expressions, callable from both the Column API
+  * (`call_function`) and SQL. Query code does not register them: a
+  * session gets them from [[GraftExtensions]] via `spark.sql.extensions`,
+  * which [[graft.GraftSession]] sets, or from one [[register]] call on a
+  * session built elsewhere.
   */
 object GraftFunctions {
   val CosineName = "graft_cosine_similarity"
@@ -215,9 +217,9 @@ object GraftFunctions {
         exprs => CellTopK(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])))
   }
 
-  /** Registers [[functions]] into the session's registry, skipping
-    * names it already holds (an earlier call, or the extension path)
-    * so repeated calls do not re-register and log a replacement WARN.
+  /** Registers [[functions]] into a session built without
+    * [[GraftExtensions]], skipping names its registry already holds so
+    * repeated calls do not re-register and log a replacement WARN.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

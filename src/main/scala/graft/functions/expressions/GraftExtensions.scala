@@ -2,12 +2,12 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Production registration surface: ship the engine's native
-  * expressions to every session of a deployment via
+/** The registration path: ships the engine's native expressions to
+  * every session built with
   * `spark.sql.extensions=graft.functions.expressions.GraftExtensions`
-  * (spark-submit / cluster conf), instead of the per-session
-  * [[GraftFunctions.register]] call the library entry points make.
-  * Both paths iterate the same [[GraftFunctions.functions]] table.
+  * ([[graft.GraftSession]] sets it; spark-submit / cluster conf in a
+  * deployment), `newSession()` clones included. It iterates the same
+  * [[GraftFunctions.functions]] table as [[GraftFunctions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -30,7 +30,6 @@ object Advanced {
     * bound the window formulation carries.
     */
   def joinAsOf(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.asofLast
     val timeline = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"), col("o_orderdate"))
@@ -62,7 +61,6 @@ object Advanced {
     * globally.
     */
   def joinAsOfForward(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.asofLast
     val timeline = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"), col("o_orderdate"))
@@ -98,7 +96,6 @@ object Advanced {
     * integer micro deltas.
     */
   def joinAsOfNearest(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.asofLast
     val timeline = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"), col("o_orderdate"))
@@ -206,7 +203,6 @@ object Advanced {
     val fresh = col("pick").isNotNull &&
       unix_micros(col("ts")) -
         unix_micros(col("pick.o_orderdate").cast("timestamp")) <= AsofToleranceUs
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.asofLast
     val timeline = Tables.orders(spark, sfDir)
       .groupBy(col("o_custkey"), col("o_orderdate"))

@@ -141,7 +141,6 @@ object EventAnalytics {
     * it with `ORDER BY c_ts DESC, c_id DESC`.
     */
   def attribution(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.asofLast
     val ev = Tables.events(spark, sfDir)
     val clickTl = ev.filter(col("event_type") === "click")

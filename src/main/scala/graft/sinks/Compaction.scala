@@ -33,12 +33,7 @@ object Compaction {
     spark.read.parquet(dir).repartition(numFiles).write.mode("overwrite").parquet(tmp)
     Files.move(Paths.get(dir), Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(dir), StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(new java.io.File(old))
+    graft.Warehouse.deleteRecursively(new java.io.File(old))
     before
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

@@ -141,7 +141,6 @@ object CorpusPrep {
     */
   def decontaminated(docs: DataFrame, sfDir: String, lateness: String = "1 minute"): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.expressions.GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleHashes
     val (bitsRow, mBits) = graft.ext.Dedup.bloomIndex(spark, sfDir)
     prepared(docs, lateness)

@@ -111,18 +111,13 @@ final class VersionedStore(spark: SparkSession, root: String, keepVersions: Int 
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
   private def prune(latest: Long): Unit = {
     val dir = rootPath.toFile
     if (dir.exists) {
       dir.listFiles().filter(_.getName.startsWith("v"))
         .flatMap(f => f.getName.drop(1).toLongOption.map(_ -> f))
         .filter { case (v, _) => v <= latest - keepVersions }
-        .foreach { case (_, f) => deleteRecursively(f) }
+        .foreach { case (_, f) => graft.Warehouse.deleteRecursively(f) }
     }
   }
 }

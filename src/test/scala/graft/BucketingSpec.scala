@@ -25,6 +25,7 @@ class BucketingSpec extends AnyFunSuite {
     // disable broadcast so the join planner must pick a sort-merge
     // join — the strategy that exists at 100 TB where neither fact
     // side fits in memory; bucketing is what makes it exchange-free
+    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val joined = spark.table("buckets.lineitem_b")
       .join(spark.table("buckets.orders_b"),
@@ -33,7 +34,8 @@ class BucketingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
     val rows =
       try joined.collect()
-      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      // restore the session profile's value, not Spark's default
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
     assert(rows.map(_.getLong(1)).sum === Tables.lineitem(spark, sf).count())
 
     // both sides report the same bucket layout, so the join itself

@@ -100,7 +100,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("native cosine expression equals the built-in zip_with/aggregate fold") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf).limit(200)
     val pairs = emb.toDF("id_a", "emb_a", "l_a")
       .crossJoin(emb.toDF("id_b", "emb_b", "l_b").limit(20))
@@ -118,13 +117,11 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("native cosine returns null for zero vectors") {
-    GraftFunctions.register(spark)
     val df = Seq((Array(0f, 0f, 0f), Array(1f, 2f, 3f))).toDF("a", "b")
     assert(df.select(GraftFunctions.cosineSim(col("a"), col("b"))).first().isNullAt(0))
   }
 
   test("top-K aggregator equals window row_number formulation") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -319,7 +316,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(scores.zip(scores.tail).forall { case (a, b) => a <= b }, scores.toSeq)
     // center 2 recomputed directly: the vector least similar to the seed
     import graft.functions.expressions.GraftFunctions
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val seedEmb = emb.filter(col("vec_id") === rows.head._2)
       .select(col("embedding").as("s_emb"))
@@ -770,7 +766,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("weighted_sq_dist kernel equals the declarative zip_with/aggregate fold") {
     import spark.implicits._
-    graft.functions.expressions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(11)
     val rows = (1 to 40).map { i =>
@@ -795,7 +790,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("vector_dot_int kernel equals the declarative zip_with/aggregate fold") {
     import spark.implicits._
-    graft.functions.expressions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(7)
     val rows = (1 to 50).map { i =>
@@ -1038,21 +1032,16 @@ class OperatorSpec extends AnyFunSuite {
     free(); free()
   }
 
-  test("every query self-registers its kernels: analyzable after the registry is wiped") {
-    // a library consumer calls ONE query function on a fresh session;
-    // any query that leans on a sibling having registered the native
-    // expressions first is broken in isolation (emb_outliers regressed
-    // exactly this way). Wipe, then analyze every declared plan.
-    val reg = spark.sessionState.functionRegistry
-    def wipe(): Unit =
-      GraftFunctions.functions.foreach { case (id, _, _) => reg.dropFunction(id) }
+  test("the session extension supplies every kernel: each query analyzes on a bare clone") {
+    // a newSession() clone holds only the built-in and the
+    // extension-injected functions, and no query registers kernels
+    // itself, so every declared plan must resolve on it as it is
+    val clone = spark.newSession()
     SparkEntry.queries.foreach { case (name, fn) =>
-      wipe()
       withClue(name) {
-        fn(spark, sf).queryExecution.analyzed // analysis resolves or throws
+        fn(clone, sf).queryExecution.analyzed // analysis resolves or throws
       }
     }
-    GraftFunctions.register(spark) // restore for later suites
   }
 
   test("misra-gries: guaranteed superset over a vocab far exceeding k, exact confirm thresholds") {
@@ -1511,7 +1500,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("shingle_hashes kernel equals the declarative transform/array_join/xxhash64 form") {
-    GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleHashes
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
       .unionByName(Seq(
@@ -1533,7 +1521,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("shingle instance hashes equal xxhash64 of the joined n-gram strings") {
-    GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.shingleInstanceHashes
     val docs = Tables.documents(spark, sf).limit(50)
     // n=2: kernel vs xxhash64(concat_ws(" ", w_i, w_{i+1})) per instance
@@ -1551,7 +1538,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("cell_top_k kernel equals the declarative sort_array(transform(...)) form") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     // quantizer-as-data: first 7 corpus vectors standing in as cells
     val quant = emb.filter(col("vec_id") < 7)
@@ -1583,7 +1569,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("asof_last binary search: exact hit, between, before-first, empty, null timeline") {
-    GraftFunctions.register(spark)
     import graft.functions.expressions.GraftFunctions.asofLast
     val tl = Seq((1L, Seq((10L, 100L), (20L, 200L), (30L, 300L))),
                  (2L, Seq.empty[(Long, Long)]))
@@ -1618,8 +1603,15 @@ class OperatorSpec extends AnyFunSuite {
     classOf[org.apache.spark.sql.SparkSessionExtensions]
       .getMethod("registerFunctions", classOf[FunctionRegistry])
       .invoke(ext, extReg)
-    GraftFunctions.register(spark)
-    val sessionReg = spark.sessionState.functionRegistry
+    // the register path on a session registry with the graft names
+    // dropped (a clone's registry is its own copy)
+    val clone = spark.newSession()
+    val sessionReg = clone.sessionState.functionRegistry
+    def missing = GraftFunctions.functions.map(_._1).filterNot(sessionReg.functionExists)
+    GraftFunctions.functions.foreach { case (id, _, _) => sessionReg.dropFunction(id) }
+    assert(missing.size === GraftFunctions.functions.size)
+    GraftFunctions.register(clone)
+    assert(missing.isEmpty)
     val id = FunctionIdentifier(GraftFunctions.ShingleName)
     // 6 words → 5 bigram instances, 2 distinct bigrams
     val text = Literal("a b a b a b")
@@ -2389,7 +2381,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("semdedup hot-cell cap: an adversarial all-in-one-cell corpus generates zero pairs") {
-    graft.functions.expressions.GraftFunctions.register(spark)
     // 40 identical vectors in one cell (every pair cosine 1.0) plus a
     // 2-member cold cell; cap 10 must drop the hot cell's O(occ²)
     // pair work entirely while the cold cell still resolves its dup

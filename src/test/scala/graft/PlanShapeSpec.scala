@@ -515,7 +515,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("native expressions stay inside whole-stage codegen") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.GraftFunctions.register(spark)
     val df = Tables.embeddings(spark, sf)
       .select(graft.functions.expressions.GraftFunctions
         .cosineSim(col("embedding"), col("embedding")).as("c"))
